@@ -8,17 +8,16 @@ Reference behavior being reproduced (SURVEY.md §2.2):
 - P3  float64 -> int narrowing for counters     (export_clickhouse.go:76,79)
 
 Spark-first design: the whole transform is native column expressions — no UDF,
-no per-row Python — so it stays inside whole-stage codegen and is identical in
-batch and Structured Streaming. ``from_json`` in PERMISSIVE mode yields a NULL
-struct for malformed input (= drop-after-filter ≙ the reference's log-and-skip)
-and NULL fields for missing keys (defaulted with ``coalesce`` to preserve the
-reference's zero-value semantics — Spark's natural NULLs would diverge from the
-oracle).
+no per-row Python — and is identical in batch and Structured Streaming.
+``from_json`` in PERMISSIVE mode marks malformed input in a corrupt-record
+column (dropped ≙ the reference's log-and-skip) and yields NULL fields for
+missing keys (defaulted with ``coalesce`` to preserve the reference's
+zero-value semantics — Spark's natural NULLs would diverge from the oracle).
 
 Scale note: this is a narrow, shuffle-free map stage; at 100 TB it
 parallelizes by input split (batch) or Kafka partition (streaming) with no
-skew concerns. Keeping defaults/casts as column expressions lets Catalyst
-prune unused input fields down to the 12 consumed ones at the scan.
+skew concerns. The parse itself is the stage's cost, so each message is
+parsed once (see ``decode_flows``).
 """
 
 from __future__ import annotations
@@ -43,179 +42,28 @@ def decode_flows(raw: DataFrame, value_col: str = "value") -> DataFrame:
     the Kafka source's ``value: binary`` column or any string column.
 
     PERMISSIVE mode routes unparseable input into a corrupt-record column;
-    filtering on it is the reference's log-and-skip path (P4). An explicit
-    corrupt column (rather than testing the struct for NULL) is required
-    because from_json may return an all-NULL struct for some malformed
-    inputs, which would be indistinguishable from a legitimately empty flow.
+    dropping those rows is the reference's log-and-skip path (P4). An
+    explicit corrupt column (rather than testing the struct for NULL) is
+    required because from_json may return an all-NULL struct for some
+    malformed inputs, which would be indistinguishable from a legitimately
+    empty flow. The full input schema is parsed, not just the consumed
+    fields, so a wrong-typed extra field still marks the record corrupt.
+
+    Each message is parsed exactly once. The keep/drop test runs inside a
+    generator (``inline`` over a zero-or-one element array) because a Filter
+    on the parsed struct is pushed below the Project with the parse inlined
+    into it, which parses every message twice; ``JsonToStructs`` is
+    interpreted (CodegenFallback), so each parse costs in full.
     """
-    parsed = raw.withColumn(
-        "_flow",
-        F.from_json(
-            F.col(value_col).cast("string"),
-            _DECODE_SCHEMA,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT_COL},
-        ),
+    parsed = F.from_json(
+        F.col(value_col).cast("string"),
+        _DECODE_SCHEMA,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT_COL},
     )
-    # NOTE (measured at sf0.1): filter pushdown inlines this predicate's
-    # from_json below upstream exchanges, and JsonToStructs is CodegenFallback
-    # (always interpreted) — so on a low-parallelism upstream (single-file
-    # scan) the duplicated parse serializes. Batch pipelines should prefer
-    # ``decode_flows_arrow``; this expression form is kept as the streaming
-    # path, where the source stage and decode stage are one (no exchange to
-    # push through) and parallelism equals source partitions.
-    return (
-        parsed.filter(F.col("_flow").isNotNull() & F.col(f"_flow.{_CORRUPT_COL}").isNull())
-        .select("_flow.*")
-        .drop(_CORRUPT_COL)
+    kept = F.filter(
+        F.array(parsed), lambda s: s.isNotNull() & s[_CORRUPT_COL].isNull()
     )
-
-
-def decode_flows_arrow(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """Arrow-vectorized decode with the same record semantics as
-    ``decode_flows``: malformed JSON or a type-mismatched field drops the
-    record; missing fields are NULL; JSON numbers coerce to text for string
-    fields.
-
-    Why it exists: ``from_json`` is a CodegenFallback expression (always
-    interpreted) and its corrupt-record filter gets pushdown-inlined —
-    duplicated, interpreted parses that serialize on low-parallelism scans.
-    A Python-side decode parses each record exactly once (UDFs are never
-    pushed down or duplicated). Used by the batch adapters; streaming
-    keeps ``decode_flows``.
-
-    r12 vectorization (guide §4.2 — hand whole batches to native code):
-    the per-row ``json.loads`` + 12-field Python coercion loop is replaced
-    by ``pyarrow.json.read_json`` over the whole Arrow batch (one C++
-    parse, zero per-row Python). Semantics are preserved EXACTLY by
-    construction: the block parser's coercions match the row path wherever
-    it succeeds (verified case by case: missing key -> NULL, JSON null ->
-    NULL, int -> double widening, NaN/Infinity literals, empty lines
-    skipped = dropped), and every input it handles DIFFERENTLY it REJECTS
-    wholesale (type-mismatched fields, non-object docs, malformed JSON,
-    duplicate keys, lone surrogates, invalid UTF-8) — rejection falls back
-    to the original per-record path for that batch, so number->string
-    coercion and per-record drops still come out row-identical. A batch
-    whose rows embed a raw newline would re-delimit under the block parser
-    (one bad row could become two parseable lines), so it is routed to the
-    fallback up front by a vectorized scan; valid JSON never contains an
-    unescaped newline, making all three fallback triggers malformed-input
-    cases — the hot path for well-formed corpora is pure pyarrow.
-    """
-    import json as _json
-
-    fields = [(f.name, f.dataType.typeName()) for f in FLOW_INPUT_SCHEMA.fields]
-    schema = FLOW_INPUT_SCHEMA
-
-    def _decode_records(values) -> list[dict]:
-        """The reference's per-record semantics (P2-P4), row at a time —
-        the exact-semantics fallback for batches the block parser rejects
-        (and the behavior contract the fast path is verified against)."""
-        rows = []
-        for v in values:
-            if v is None:
-                continue
-            if isinstance(v, (bytes, bytearray)):
-                v = v.decode("utf-8", errors="replace")
-            try:
-                obj = _json.loads(v)
-            except Exception:
-                continue  # malformed -> drop (ingest_kafka.go:40-42)
-            if not isinstance(obj, dict):
-                continue
-            out: dict = {}
-            ok = True
-            for name, typ in fields:
-                val = obj.get(name)
-                if val is None:
-                    out[name] = None
-                elif typ == "double":
-                    if isinstance(val, bool) or not isinstance(val, (int, float)):
-                        ok = False  # type mismatch -> corrupt record
-                        break
-                    out[name] = float(val)
-                else:  # string
-                    if isinstance(val, str):
-                        out[name] = val
-                    elif isinstance(val, bool) or isinstance(val, (dict, list)):
-                        ok = False
-                        break
-                    elif isinstance(val, int):
-                        out[name] = str(val)
-                    elif isinstance(val, float):
-                        out[name] = repr(val)
-                    else:
-                        ok = False
-                        break
-            if ok:
-                rows.append(out)
-        return rows
-
-    def decode(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.json as pj
-
-        arrow_schema = pa.schema(
-            [
-                pa.field(n, pa.float64() if t == "double" else pa.string())
-                for n, t in fields
-            ]
-        )
-        parse_opts = pj.ParseOptions(
-            explicit_schema=arrow_schema, unexpected_field_behavior="ignore"
-        )
-        # Single-threaded parse: every task slot runs its own Python
-        # worker, so per-worker thread pools would oversubscribe the host
-        # (32 tasks x N arrow threads); block_size sized so a typical
-        # 10k-row batch parses as one block.
-        read_opts = pj.ReadOptions(use_threads=False, block_size=1 << 23)
-        for batch in batches:
-            col = batch.column(0)
-            if col.null_count:
-                col = col.drop_null()  # NULL message -> drop, like the row path
-            if len(col) == 0:
-                continue
-            try:
-                if pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type):
-                    col = col.cast(pa.string())  # invalid UTF-8 -> fallback
-                elif pa.types.is_large_string(col.type):
-                    col = col.cast(pa.string())
-                if pc.any(pc.match_substring(col, "\n")).as_py():
-                    # an embedded raw newline would re-delimit records
-                    raise ValueError("embedded newline; per-record fallback")
-                lines = pc.binary_join(
-                    pa.ListArray.from_arrays(
-                        pa.array([0, len(col)], type=pa.int32()), col
-                    ),
-                    "\n",
-                )
-                buf = pa.py_buffer(lines[0].as_py().encode("utf-8"))
-                tbl = pj.read_json(
-                    pa.BufferReader(buf),
-                    parse_options=parse_opts,
-                    read_options=read_opts,
-                )
-                yield from tbl.to_batches()
-                continue
-            except Exception:
-                pass  # any block-parse rejection: exact per-record fallback
-            rows = _decode_records(col.to_pylist())
-            if rows:
-                yield pa.record_batch(
-                    [
-                        pa.array(
-                            [r[n] for r in rows],
-                            type=pa.float64() if t == "double" else pa.string(),
-                        )
-                        for n, t in fields
-                    ],
-                    schema=arrow_schema,
-                )
-
-    # Project to the one consumed column BEFORE the Python boundary: Spark
-    # cannot see which columns an opaque map function touches and would
-    # otherwise ship (and scan) every column of ``raw`` (guide §4.1).
-    return raw.select(F.col(value_col)).mapInArrow(decode, schema)
+    return raw.select(F.inline(kept)).drop(_CORRUPT_COL)
 
 
 def _normalized_column(src: str, dst: str, typ: str, default: object) -> Column:
@@ -242,13 +90,6 @@ def normalize_flows(decoded: DataFrame) -> DataFrame:
     )
 
 
-def flows_from_json(
-    raw: DataFrame, value_col: str = "value", *, use_arrow: bool = False
-) -> DataFrame:
-    """Full record hot path (SURVEY.md §3.2): decode -> normalize.
-
-    ``use_arrow=True`` swaps in the vectorized decode (same semantics, see
-    ``decode_flows_arrow``) — the batch-backfill fast path.
-    """
-    decoded = decode_flows_arrow(raw, value_col) if use_arrow else decode_flows(raw, value_col)
-    return normalize_flows(decoded)
+def flows_from_json(raw: DataFrame, value_col: str = "value") -> DataFrame:
+    """Full record hot path (SURVEY.md §3.2): decode -> normalize."""
+    return normalize_flows(decode_flows(raw, value_col))

@@ -46,7 +46,7 @@ FROM events
 """
 
 
-# Decoded-flows memo: the events->JSON->Arrow-decode derivation is identical
+# Decoded-flows memo: the events->JSON->decode derivation is identical
 # for every flows_* query, and at bench scale it dominated the family's cost
 # (~21 s of an 85 s suite re-deriving the same relation 6 times — VERDICT r1
 # perf audit). localCheckpoint(eager) materializes the decoded rows once per
@@ -64,9 +64,7 @@ def _flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cached is not None:
         return cached
     events = load_compute_table(spark, sf_dir, "events")
-    # Arrow decode: single vectorized parse per record, pushdown-proof; the
-    # from_json path (streaming parity) is equivalence-tested against it.
-    flows = flows_from_json(events_to_flow_json(events), use_arrow=True)
+    flows = flows_from_json(events_to_flow_json(events))
     flows = flows.localCheckpoint(eager=True)
     _FLOWS_CACHE[key] = flows
     return flows

@@ -18,8 +18,8 @@ counters narrow to LongType on output (export_clickhouse.go:76,79 does
 ``int(v.(float64))``).
 
 At 100 TB the explicit schema matters: schema inference would force a full
-pre-scan per batch, and a typed struct keeps the decode inside Tungsten
-(whole-stage codegen) instead of a per-row Python path.
+pre-scan per batch, and a typed struct keeps the decode in the JVM instead of
+a per-row Python path.
 """
 
 from __future__ import annotations

@@ -8,7 +8,9 @@ Kafka broker the sandbox lacks — the decode/normalize/foreachBatch work per
 row is identical; only the source connector differs (sources/kafka.py:30
 keeps the real Kafka contract).
 
-Measured work per row: schemaless JSON parse (Arrow-vectorized decode),
+The spine is built by ``streaming.pipeline.normalized_stream`` — the same
+function the app runs — so the number describes the production decode.
+Measured work per row: one ``from_json`` parse against the flow schema,
 12-column projection with missing-field defaults and narrowing casts (P1-P4),
 then a per-batch count+hash over EVERY column in foreachBatch (the
 ClickHouse sink stand-in's accounting, minus the network write).
@@ -23,7 +25,8 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from kafka_clickhouse_example_spark.operators.normalize import flows_from_json
+from kafka_clickhouse_example_spark.operators.normalize import decode_flows
+from kafka_clickhouse_example_spark.streaming.pipeline import normalized_stream
 
 
 def _consume_all(batch_df) -> int:
@@ -51,7 +54,6 @@ def streaming_throughput(
     sf_dir: str,
     *,
     files: int = 32,
-    use_arrow: bool = True,
     repeat: int = 10,
 ) -> dict:
     """Run the spine once over the events-derived flow JSON; return
@@ -94,7 +96,7 @@ def streaming_throughput(
         for attempt in range(3):
             seen["rows"] = 0
             stream = spark.readStream.schema("value string").text(json_dir)
-            flows = flows_from_json(stream, use_arrow=use_arrow)
+            flows = normalized_stream(stream)
             t0 = time.perf_counter()
             q = (
                 flows.writeStream.foreachBatch(sink)
@@ -138,7 +140,7 @@ def streaming_throughput(
             .option("maxFilesPerTrigger", max(1, files // 8))
             .text(json_dir)
         )
-        flows = flows_from_json(stream, use_arrow=use_arrow)
+        flows = normalized_stream(stream)
         mark["t"] = time.perf_counter()
         t0 = time.perf_counter()
         q = (
@@ -175,11 +177,6 @@ def streaming_throughput(
         # or as uniform growth across all three (host speed, which the
         # bench-level canary then corrects). Every run is already warm
         # (the spine above executed the same corpus).
-        from kafka_clickhouse_example_spark.operators.normalize import (
-            decode_flows,
-            decode_flows_arrow,
-        )
-
         def _timed_run(make_df, tag: str) -> float:
             stream = spark.readStream.schema("value string").text(json_dir)
             df = make_df(stream)
@@ -195,12 +192,9 @@ def streaming_throughput(
             q.awaitTermination()
             return round(time.perf_counter() - t0, 4)
 
-        decode = decode_flows_arrow if use_arrow else decode_flows
         scan_sec = _timed_run(lambda s: s, "scan")
-        decode_sec = _timed_run(decode, "decode")
-        full_sec = _timed_run(
-            lambda s: flows_from_json(s, use_arrow=use_arrow), "full"
-        )
+        decode_sec = _timed_run(decode_flows, "decode")
+        full_sec = _timed_run(normalized_stream, "full")
         stage_profile = {
             "scan_sec": scan_sec,
             "scan_plus_decode_sec": decode_sec,

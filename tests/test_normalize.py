@@ -5,11 +5,15 @@ unknown fields)."""
 from __future__ import annotations
 
 import json
+import math
+from decimal import Decimal
 
+import pytest
 from pyspark.sql import Row
+from pyspark.sql.types import DoubleType
 
-from kafka_clickhouse_example_spark.operators.normalize import flows_from_json
-from kafka_clickhouse_example_spark.schemas import FLOWS_COLUMNS
+from kafka_clickhouse_example_spark.operators.normalize import decode_flows, flows_from_json
+from kafka_clickhouse_example_spark.schemas import FLOW_INPUT_SCHEMA, FLOWS_COLUMNS
 
 FULL_FLOW = {
     "TimeFlowStartMs": 1704067200000.0,
@@ -89,28 +93,220 @@ def test_wrong_typed_field_behavior(spark):
     assert row.src_ip == "12345" and row.bytes == 1234
 
 
-def test_arrow_decode_equals_jvm_decode(spark):
-    """decode_flows_arrow must match from_json PERMISSIVE semantics on every
-    edge case: happy path, missing fields, malformed, wrong-typed, number
-    coercion, extra fields."""
-    from kafka_clickhouse_example_spark.operators.normalize import flows_from_json as ffj
+# -- the decode's record semantics, pinned case by case -----------------------
+#
+# ``_oracle_decode`` is the per-record specification of ``decode_flows``: one
+# message in, the decoded row (non-NULL input fields only) or nothing out. It
+# models what Spark's JSON reader (Jackson, PERMISSIVE, the full 30-field
+# input schema) does on each case below; the cases pin both the decode and
+# the oracle to an explicit expected row, so a Spark/Jackson upgrade that
+# changes a coercion fails here instead of silently changing rows. Not
+# modelled: Jackson's other lenient features (single-quoted strings),
+# duplicate keys inside a nested object kept as text, and JDK 17's
+# Double.toString where it is not the shortest repr (e.g. 4.9E-324).
 
-    messages = [
-        json.dumps(FULL_FLOW),
-        json.dumps({"TimeFlowStartMs": 1.0, "SrcAddr": "10.9.9.9"}),  # missing keys
-        "{not json",
-        "",
-        json.dumps(dict(FULL_FLOW, Bytes="not-a-number")),  # wrong type -> drop
-        json.dumps(dict(FULL_FLOW, SrcAddr=12345)),  # number->string coercion
-        json.dumps(dict(FULL_FLOW, SomethingNew=42)),  # extra field ignored
-        "[1, 2, 3]",  # valid JSON, not an object
+_JSON_WS = " \t\n\r"
+_NON_FINITE = {
+    "NaN": math.nan,
+    "Infinity": math.inf,
+    "+Infinity": math.inf,
+    "+INF": math.inf,
+    "-Infinity": -math.inf,
+    "-INF": -math.inf,
+}
+
+
+def _java_double_text(x: float) -> str:
+    """Java's Double.toString layout: positional in [1e-3, 1e7), else
+    ``d.dddEn`` — the text Jackson writes for a float read as a string."""
+    if x == 0:
+        return "-0.0" if math.copysign(1.0, x) < 0 else "0.0"
+    if 1e-3 <= abs(x) < 1e7:
+        return repr(x)  # Python's repr is positional with a ".0" here too
+    sign, digits, exp = Decimal(repr(x)).as_tuple()
+    text = "".join(map(str, digits)).rstrip("0") or "0"
+    mantissa = text[0] + "." + (text[1:] or "0")
+    return f"{'-' if sign else ''}{mantissa}E{len(digits) + exp - 1}"
+
+
+def _json_text(v) -> str:
+    """Compact JSON text of a non-string value, as Jackson copies it."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if v is None:
+        return "null"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return _java_double_text(v)
+    if isinstance(v, str):
+        return json.dumps(v, ensure_ascii=False)
+    if isinstance(v, list):
+        return "[" + ",".join(_json_text(x) for x in v) + "]"
+    return "{" + ",".join(f"{_json_text(k)}:{_json_text(x)}" for k, x in v.items()) + "}"
+
+
+def _oracle_decode(value) -> list[dict]:
+    if value is None:
+        return []
+    if isinstance(value, (bytes, bytearray)):
+        value = value.decode("utf-8", errors="replace")
+    try:
+        # Jackson reads the first JSON value and ignores what follows it.
+        obj, _ = json.JSONDecoder().raw_decode(value.lstrip(_JSON_WS))
+    except ValueError:
+        return []  # malformed -> drop (ingest_kafka.go:40-42)
+    if not isinstance(obj, dict):
+        return []
+    out = {}
+    for field in FLOW_INPUT_SCHEMA.fields:
+        val = obj.get(field.name)  # duplicate keys: the last one wins
+        if val is None:
+            continue
+        if isinstance(field.dataType, DoubleType):
+            if isinstance(val, str) and val in _NON_FINITE:
+                val = _NON_FINITE[val]
+            elif isinstance(val, bool) or not isinstance(val, (int, float)):
+                return []  # type mismatch, consumed or extra field -> drop
+            out[field.name] = float(val)
+        else:
+            text = val if isinstance(val, str) else _json_text(val)
+            # a lone surrogate has no UTF-8 form; the JVM writes '?'
+            out[field.name] = text.encode("utf-8", errors="replace").decode("utf-8")
+    return [out]
+
+
+_EDGE_CASES = {
+    "duplicate_key_last_wins": (
+        '{"SrcAddr":"a","SrcAddr":"b","Bytes":1}', [{"SrcAddr": "b", "Bytes": 1.0}]
+    ),
+    "int_for_string": ('{"SrcAddr":12345}', [{"SrcAddr": "12345"}]),
+    "float_for_string": ('{"SrcAddr":1.50}', [{"SrcAddr": "1.5"}]),
+    "float_for_string_exponent": ('{"DstAddr":1e20}', [{"DstAddr": "1.0E20"}]),
+    "bool_for_string": ('{"SrcAddr":true}', [{"SrcAddr": "true"}]),
+    "object_for_string": ('{"SrcAddr":{"x": 1}}', [{"SrcAddr": '{"x":1}'}]),
+    "array_for_string": ('{"SrcAddr":[1, "a", null]}', [{"SrcAddr": '[1,"a",null]'}]),
+    "object_for_extra_string": (
+        '{"Duplicate":{"x":[false]}}', [{"Duplicate": '{"x":[false]}'}]
+    ),
+    "string_for_consumed_number": ('{"SrcAddr":"a","Bytes":"12"}', []),
+    "string_for_extra_number": ('{"SrcAddr":"a","SrcPort":"12"}', []),
+    "bool_for_number": ('{"Packets":true}', []),
+    "nan_literal": ('{"Bytes":NaN}', [{"Bytes": math.nan}]),
+    "infinity_literals": (
+        '{"Bytes":Infinity,"Packets":-Infinity}',
+        [{"Bytes": math.inf, "Packets": -math.inf}],
+    ),
+    "nan_string_for_number": ('{"Bytes":"NaN"}', [{"Bytes": math.nan}]),
+    "infinity_string_for_number": ('{"Packets":"-Infinity"}', [{"Packets": -math.inf}]),
+    "lowercase_nan_string_for_number": ('{"Bytes":"nan"}', []),
+    "malformed_json": ('{"SrcAddr":"a"', []),
+    "top_level_array": ('[{"SrcAddr":"a"}]', []),
+    "top_level_scalar": ("42", []),
+    "empty_string": ("", []),
+    "null_value": (None, []),
+    "empty_object": ("{}", [{}]),
+    "invalid_utf8_binary": (b'{"SrcAddr":"a\xffb"}', [{"SrcAddr": "a\ufffdb"}]),
+    "raw_newline_inside_string": ('{"SrcAddr":"a\nb"}', []),
+    "raw_newline_between_tokens": ('{"SrcAddr":\n"a"}', [{"SrcAddr": "a"}]),
+    "trailing_content_ignored": ('{"SrcAddr":"a"} x', [{"SrcAddr": "a"}]),
+    "lone_surrogate": ('{"SrcAddr":"\\ud800"}', [{"SrcAddr": "?"}]),
+}
+
+
+def _canon(rows: list[dict]) -> list[dict]:
+    """NaN != NaN; compare it as a marker."""
+    return [
+        {k: "NaN" if isinstance(v, float) and math.isnan(v) else v for k, v in r.items()}
+        for r in rows
     ]
-    df = spark.createDataFrame([(m,) for m in messages], "value string")
-    jvm = {tuple(r) for r in ffj(df, use_arrow=False).collect()}
-    arrow = {tuple(r) for r in ffj(df, use_arrow=True).collect()}
-    assert arrow == jvm
-    # full==extra-field (same 12 cols after projection) + partial + coerced
-    assert len(jvm) == 3
+
+
+def _decoded(spark, values: list) -> list[dict]:
+    binary = any(isinstance(v, bytes) for v in values)
+    raw = spark.createDataFrame(
+        [(v,) for v in values], "value binary" if binary else "value string"
+    )
+    return [
+        {k: v for k, v in r.asDict().items() if v is not None}
+        for r in decode_flows(raw).collect()
+    ]
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_CASES))
+def test_decode_edge_case(spark, case):
+    """One single-message batch per case: the decode and the oracle both
+    produce exactly the expected row."""
+    value, expected = _EDGE_CASES[case]
+    assert _canon(_decoded(spark, [value])) == _canon(expected)
+    assert _canon(_oracle_decode(value)) == _canon(expected)
+
+
+def test_decode_mixed_batch_matches_oracle(spark):
+    """All edge cases in one batch decode exactly as they do one by one."""
+    values = [v for v, _ in _EDGE_CASES.values() if not isinstance(v, bytes)]
+    values += [json.dumps(FULL_FLOW), json.dumps(dict(FULL_FLOW, SomethingNew=[1]))]
+    want = [r for v in values for r in _oracle_decode(v)]
+
+    def bag(rows):
+        return sorted(json.dumps(r, sort_keys=True) for r in _canon(rows))
+
+    assert bag(_decoded(spark, values)) == bag(want)
+
+
+def test_non_finite_counters_normalize(spark):
+    """NaN/Infinity counters survive the decode; floor() maps NaN to 0 and
+    +/-Infinity to the long range ends."""
+    [row] = _run(spark, ['{"Bytes":NaN,"Packets":Infinity,"TimeFlowStartMs":-Infinity}'])
+    assert (row.bytes, row.packets) == (0, 9223372036854775807)
+    assert row.start == -math.inf
+
+
+def _from_json_count(plan) -> int:
+    return plan.toString().count("from_json(")
+
+
+def test_decode_plan_parses_once(spark, tmp_path):
+    """The executed plan of the decode holds exactly one ``from_json``: in a
+    batch scan with the session's default optimizer rules, after
+    ``configure_runtime`` (which excludes two inference rules), and in the
+    streaming micro-batch the app runs. Pushing a corrupt-record Filter below
+    the parse would add a second one."""
+    from kafka_clickhouse_example_spark.session import configure_runtime
+    from kafka_clickhouse_example_spark.streaming.pipeline import normalized_stream
+
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "a.json").write_text(json.dumps(FULL_FLOW) + "\n{not json\n")
+
+    def batch_plan():
+        flows = flows_from_json(spark.read.text(str(d)))
+        assert len(flows.collect()) == 1
+        return flows._jdf.queryExecution().executedPlan()
+
+    key = "spark.sql.optimizer.excludedRules"
+    saved = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        assert _from_json_count(batch_plan()) == 1
+        configure_runtime(spark)
+        assert _from_json_count(batch_plan()) == 1
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+    stream = normalized_stream(spark.readStream.schema("value string").text(str(d)))
+    q = (
+        stream.writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    last = q._jsq.streamingQuery().lastExecution()
+    assert _from_json_count(last.executedPlan()) == 1
 
 
 def test_custom_jsonl_datasource_matches_text_source(spark, tmp_path):
