@@ -48,6 +48,9 @@ def decode_flows(raw: DataFrame, value_col: str = "value") -> DataFrame:
     malformed inputs, which would be indistinguishable from a legitimately
     empty flow. The full input schema is parsed, not just the consumed
     fields, so a wrong-typed extra field still marks the record corrupt.
+    Jackson's NaN/Infinity numbers (as literals or as strings in a number
+    field) and single-quoted JSON are turned off: Go's ``json.Unmarshal``
+    rejects them, so the reference drops such a message.
 
     Each message is parsed exactly once. The keep/drop test runs inside a
     generator (``inline`` over a zero-or-one element array) because a Filter
@@ -58,7 +61,12 @@ def decode_flows(raw: DataFrame, value_col: str = "value") -> DataFrame:
     parsed = F.from_json(
         F.col(value_col).cast("string"),
         _DECODE_SCHEMA,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT_COL},
+        {
+            "mode": "PERMISSIVE",
+            "columnNameOfCorruptRecord": _CORRUPT_COL,
+            "allowNonNumericNumbers": "false",
+            "allowSingleQuotes": "false",
+        },
     )
     kept = F.filter(
         F.array(parsed), lambda s: s.isNotNull() & s[_CORRUPT_COL].isNull()

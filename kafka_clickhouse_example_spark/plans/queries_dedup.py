@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from kafka_clickhouse_example_spark.operators import dedup as D
 from kafka_clickhouse_example_spark.operators import planning as P
 from kafka_clickhouse_example_spark.registry import register
-from kafka_clickhouse_example_spark.session import configure_runtime
+from kafka_clickhouse_example_spark.session import configure_runtime, session_memo
 from kafka_clickhouse_example_spark.sources.catalog import load_compute_table
 
 JACCARD_THRESHOLD = 0.3
@@ -22,22 +22,15 @@ JACCARD_THRESHOLD = 0.3
 # Shingle memo: four dedup queries (jaccard, stop-cut, clusters, minhash)
 # derive the identical (doc_id, sh) relation; tokenize/shingle once per
 # (session, sf_dir) and materialize via eager localCheckpoint — the same
-# pattern as the flows-family cache (a real pipeline shingles its corpus
-# once, not per downstream consumer).
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Row/postings stats captured by the memo's one guard pass — downstream
-# sizing guards (stop-cut SHJ build, split-audit SMJ sort) read these
-# instead of running their own per-construction Spark job (round-11
-# verdict ask #8).
-_SHINGLE_STATS: dict[tuple[str, str], dict[str, int]] = {}
-
-
-def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
+# pattern as the flows-family memo (a real pipeline shingles its corpus
+# once, not per downstream consumer). The value carries the row/postings
+# stats of the memo's one guard pass: downstream sizing guards (stop-cut
+# SHJ build, split-audit SMJ sort) read these instead of running their own
+# per-construction Spark job (round-11 verdict ask #8).
+def _shingled_memo(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict[str, int]]:
+    def build():
         docs = load_compute_table(spark, sf_dir, "documents")
-        cached = D.with_shingles(docs).localCheckpoint(eager=True)
+        shingles = D.with_shingles(docs).localCheckpoint(eager=True)
         # Memo-residency guard (round-11 sf300ctl finding): a
         # localCheckpoint memo that outgrows the unified pool pins the
         # storage region and starves every shuffle writer downstream —
@@ -45,7 +38,7 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same O(cached partitions) pass also records the row and postings
         # counts every downstream sizing guard needs, so no dedup query
         # pays a guard job at construction time.
-        n_rows, n_postings = cached.agg(
+        n_rows, n_postings = shingles.agg(
             F.count("*"), F.coalesce(F.sum(F.size("sh")), F.lit(0))
         ).first()
         P.warn_if_memo_overflows(
@@ -54,35 +47,29 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
             P.MEMO_ARRAY_ROW_BYTES_DESER,
             "shingle memo (localCheckpoint)",
         )
-        _SHINGLE_STATS[key] = {"rows": int(n_rows), "postings": int(n_postings)}
-        _SHINGLE_CACHE[key] = cached
-    return cached
+        return shingles, {"rows": int(n_rows), "postings": int(n_postings)}
+
+    return session_memo(spark, ("shingles", sf_dir), build)
 
 
-def _shingled_stats(spark: SparkSession, sf_dir: str) -> dict[str, int]:
-    """Row/postings counts of the shingle memo (creating it if needed)."""
-    _shingled(spark, sf_dir)
-    return _SHINGLE_STATS[(spark.sparkContext.applicationId, sf_dir)]
+def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _shingled_memo(spark, sf_dir)[0]
 
 
 # Pair memo: clusters and edit-distance verification are downstream
 # consumers of the jaccard pair list; a real pipeline materializes the pair
 # graph once and feeds every consumer. dedup_jaccard_pairs itself still
 # computes the pipeline live (it IS the benchmark of pair generation).
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is None:
-        cached = (
-            D.jaccard_pairs(None, JACCARD_THRESHOLD, shingles=_shingled(spark, sf_dir))
-            .select("id1", "id2")
-            .localCheckpoint(eager=True)
+    return session_memo(
+        spark,
+        ("pairs", sf_dir),
+        lambda: D.jaccard_pairs(
+            None, JACCARD_THRESHOLD, shingles=_shingled(spark, sf_dir)
         )
-        _PAIRS_CACHE[key] = cached
-    return cached
+        .select("id1", "id2")
+        .localCheckpoint(eager=True),
+    )
 
 
 # Cluster labels are derived from the memoized pair graph by an iterative
@@ -90,18 +77,14 @@ def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # for every downstream consumer (canonical selection), same rationale as the
 # pair memo. dedup_duplicate_clusters itself still runs the propagation live
 # (it IS the benchmark of clustering).
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CLUSTERS_CACHE.get(key)
-    if cached is None:
-        cached = D.duplicate_clusters(
+    return session_memo(
+        spark,
+        ("clusters", sf_dir),
+        lambda: D.duplicate_clusters(
             _jaccard_pairs_cached(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-        _CLUSTERS_CACHE[key] = cached
-    return cached
+        ).localCheckpoint(eager=True),
+    )
 
 
 # --- SQL building blocks (lockstep with operators/dedup.py) -----------------
@@ -250,7 +233,7 @@ def dedup_jaccard_stopcut_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_shingle_freq=STOP_SHINGLE_FREQ,
         shingles=_shingled(spark, sf_dir),
         # memo stats feed the SHJ sizing guard: zero jobs at construction
-        postings_estimate=_shingled_stats(spark, sf_dir)["postings"],
+        postings_estimate=_shingled_memo(spark, sf_dir)[1]["postings"],
     ).orderBy("id1", "id2")
 
 
@@ -912,7 +895,7 @@ def dedup_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # memo row count is a conservative upper bound for the 80% train
         # slice, so the guard can only fire EARLIER, and construction runs
         # zero Spark jobs (round-11 verdict ask #8).
-        corpus_rows=_shingled_stats(spark, sf_dir)["rows"],
+        corpus_rows=_shingled_memo(spark, sf_dir)[1]["rows"],
     ).orderBy("new_id", "corpus_id")
 
 

@@ -21,7 +21,7 @@ from kafka_clickhouse_example_spark.plans.flows import (
     readme_verification,
 )
 from kafka_clickhouse_example_spark.registry import register
-from kafka_clickhouse_example_spark.session import configure_runtime
+from kafka_clickhouse_example_spark.session import configure_runtime, session_memo
 from kafka_clickhouse_example_spark.sources.catalog import load_compute_table
 
 # Shared SQL fragment: the deterministic events->flows mapping (must stay in
@@ -54,20 +54,15 @@ FROM events
 # the materialized relation instead of replaying the decode. Semantics are
 # unchanged: the same expression tree feeds the checkpoint. A real pipeline
 # materializes flows once at ingest; this memo is that materialization.
-_FLOWS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_runtime(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _FLOWS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    events = load_compute_table(spark, sf_dir, "events")
-    flows = flows_from_json(events_to_flow_json(events))
-    flows = flows.localCheckpoint(eager=True)
-    _FLOWS_CACHE[key] = flows
-    return flows
+    return session_memo(
+        spark,
+        ("flows", sf_dir),
+        lambda: flows_from_json(
+            events_to_flow_json(load_compute_table(spark, sf_dir, "events"))
+        ).localCheckpoint(eager=True),
+    )
 
 
 @register(

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from kafka_clickhouse_example_spark.operators import similarity as S
 from kafka_clickhouse_example_spark.registry import register
-from kafka_clickhouse_example_spark.session import configure_runtime
+from kafka_clickhouse_example_spark.session import configure_runtime, session_memo
 from kafka_clickhouse_example_spark.sources.catalog import load_compute_table
 
 TOP_K = 10
@@ -84,20 +84,16 @@ def _dyn_bucket_sql(v: str) -> str:
 # Corpus memo: seven similarity queries scan the same embeddings relation;
 # load + nanos-timestamp conversion happens once per (session, sf_dir) and
 # the materialized vectors feed every consumer (same pattern as the flows
-# and shingle caches).
-_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# and shingle memos).
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_runtime(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EMB_CACHE.get(key)
-    if cached is None:
-        cached = load_compute_table(spark, sf_dir, "embeddings").localCheckpoint(
+    return session_memo(
+        spark,
+        ("emb", sf_dir),
+        lambda: load_compute_table(spark, sf_dir, "embeddings").localCheckpoint(
             eager=True
-        )
-        _EMB_CACHE[key] = cached
-    return cached
+        ),
+    )
 
 
 @register(
@@ -233,9 +229,6 @@ def sim_topk_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Centroid memo: training is deterministic for a given (session, sf_dir), so
 # repeated calls (bench warmup + best-of-2) reuse the trained quantizer — in
 # production the IVF index is trained once and served for months.
-_IVF_CACHE: dict[tuple[str, str], object] = {}
-
-
 @register("sim_topk_ivf")  # rows-only: k-means training is not SQL-expressible
 def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-10: deterministic k-means coarse quantizer (trained on a
@@ -245,15 +238,8 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     absolute vs sim_topk_bruteforce)."""
     emb = _emb(spark, sf_dir)
     queries_pdf = _queries_pdf(emb)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cent = _IVF_CACHE.get(key)
-    if cent is None:
-        cent = S.train_ivf_centroids(emb)
-        _IVF_CACHE[key] = cent
+    cent = session_memo(spark, ("ivf", sf_dir), lambda: S.train_ivf_centroids(emb))
     return S.topk_ivf(emb, queries_pdf, TOP_K, cent).orderBy("qid", "rank")
-
-
-_PQ_CACHE: dict[tuple[str, str], object] = {}
 
 
 @register("sim_topk_pq")  # rows-only: k-means codebooks are not SQL-expressible
@@ -266,15 +252,8 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py pins absolute recall >= 0.5 vs exact."""
     emb = _emb(spark, sf_dir)
     queries_pdf = _queries_pdf(emb)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    books = _PQ_CACHE.get(key)
-    if books is None:
-        books = S.train_pq_codebooks(emb)
-        _PQ_CACHE[key] = books
+    books = session_memo(spark, ("pq", sf_dir), lambda: S.train_pq_codebooks(emb))
     return S.topk_pq(emb, queries_pdf, TOP_K, books).orderBy("qid", "rank")
-
-
-_IVFPQ_CACHE: dict[tuple[str, str], object] = {}
 
 
 @register("sim_topk_ivfpq")  # rows-only: two k-means trainings are not SQL
@@ -287,17 +266,12 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py pins absolute recall >= 0.5 vs exact (measured 0.76 at sf0.01)."""
     emb = _emb(spark, sf_dir)
     queries_pdf = _queries_pdf(emb)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    trained = _IVFPQ_CACHE.get(key)
-    if trained is None:
-        cent = _IVF_CACHE.get(key)
-        if cent is None:
-            cent = S.train_ivf_centroids(emb)
-            _IVF_CACHE[key] = cent
-        books = S.train_pq_codebooks_residual(emb, cent)
-        trained = (cent, books)
-        _IVFPQ_CACHE[key] = trained
-    cent, books = trained
+
+    def train():
+        cent = session_memo(spark, ("ivf", sf_dir), lambda: S.train_ivf_centroids(emb))
+        return cent, S.train_pq_codebooks_residual(emb, cent)
+
+    cent, books = session_memo(spark, ("ivfpq", sf_dir), train)
     return S.topk_ivfpq(emb, queries_pdf, TOP_K, cent, books).orderBy("qid", "rank")
 
 

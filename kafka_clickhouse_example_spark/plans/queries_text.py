@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from kafka_clickhouse_example_spark.operators import text as T
 from kafka_clickhouse_example_spark.registry import register
-from kafka_clickhouse_example_spark.session import configure_runtime
+from kafka_clickhouse_example_spark.session import configure_runtime, session_memo
 from kafka_clickhouse_example_spark.sources.catalog import load_compute_table
 
 
@@ -827,18 +827,14 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Trained-merges memo: the encode query consumes the same rules the
 # learned-merges query benchmarks; train once per (session, sf_dir) — a
 # real pipeline trains its tokenizer once, then encodes with it.
-_BPE_MERGES_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _bpe_merges_cached(spark: SparkSession, sf_dir: str):
     from kafka_clickhouse_example_spark.operators import bpe as B
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BPE_MERGES_CACHE.get(key)
-    if cached is None:
-        cached = B.train_bpe(_docs(spark, sf_dir), n_merges=8, merges_per_round=4)
-        _BPE_MERGES_CACHE[key] = cached
-    return cached
+    return session_memo(
+        spark,
+        ("bpe_merges", sf_dir),
+        lambda: B.train_bpe(_docs(spark, sf_dir), n_merges=8, merges_per_round=4),
+    )
 
 
 @register("text_bpe_encode_stats")  # rows-only: encode needs iteratively-trained rules

@@ -18,9 +18,13 @@ from __future__ import annotations
 
 import hashlib
 import os
+import weakref
 import zipfile
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -76,6 +80,37 @@ def ship_package(spark: SparkSession) -> None:
         _shipped_apps.add(app_id)
     except Exception:
         pass  # e.g. Spark Connect sessions without an SC; UDFs then rely on cwd
+
+
+_MEMO_ATTR = "_kce_memo"
+# The sessions that hold memo entries, held weakly: clear_session_memo()
+# reaches every one of them without keeping any alive.
+_memo_sessions: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """Return ``build()``, computed once per session and ``key``.
+
+    ``key[0]`` names the memo, e.g. ``("flows", sf_dir)``. The entries live
+    on the session object itself: a memoized DataFrame is bound to the
+    session that built it, so a sibling ``spark.newSession()`` (same
+    SparkContext, its own conf and views) builds its own, and a dropped
+    session is freed together with its entries. (Held in a
+    WeakKeyDictionary keyed by the session they would never be freed: each
+    memoized DataFrame refers back to its key.) Entries are never evicted.
+    """
+    memo = vars(spark).setdefault(_MEMO_ATTR, {})
+    if key not in memo:
+        memo[key] = build()
+        _memo_sessions.add(spark)
+    return memo[key]
+
+
+def clear_session_memo(*names: str) -> None:
+    """Drop the memo entries named ``names`` (``key[0]``) in every session."""
+    for spark in list(_memo_sessions):
+        memo = vars(spark)[_MEMO_ATTR]
+        vars(spark)[_MEMO_ATTR] = {k: v for k, v in memo.items() if k[0] not in names}
 
 
 def get_spark(

@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_clickhouse_example_spark.session import clear_session_memo, session_memo
+
 TABLES = [
     "region",
     "nation",
@@ -44,36 +46,22 @@ TIMESTAMP_COLS: dict[str, list[str]] = {
 
 _SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
-# Lazy-DataFrame memo keyed (session id, sf_dir, table): spark.read.
-# parquet + the timestamp-normalization projection costs ~80-130 ms of
-# driver time PER CALL (file listing, footer schema read, py4j round
-# trips), and the bench constructs every query fresh 3x per measurement —
-# ~20-40 s of a full sweep was spent rebuilding identical scan plans
-# (r11 measurement). The memo shares the immutable logical plan only:
-# every execution still scans the parquet files (no data or results are
-# cached), and split planning still reads session confs at execution
-# time, so relayout tests and AQE behave identically.
-#
-# Keyed by id(spark), NOT applicationId (round-11 ADVICE): DataFrames are
-# bound to the SparkSession that created them, and a sibling
-# spark.newSession() shares the applicationId but has its own conf/view
-# state — an appId key would hand the sibling the first session's
-# DataFrame and skip its nanosAsLong conf-set. id() reuse after GC is not
-# a hazard here: the memoized DataFrame holds a reference to its session,
-# so a keyed session stays alive exactly as long as its entries do.
-#
-# A caller that REWRITES files under a memoized path must call
-# clear_load_memo() (the captured file listing would go stale) — no
-# production path rewrites; the relayout tests write to fresh dirs.
-_LOAD_MEMO: dict[tuple[int, str, str], DataFrame] = {}
+# Lazy-DataFrame memo per (session, sf_dir, table): spark.read.parquet +
+# the timestamp-normalization projection costs ~80-130 ms of driver time
+# PER CALL (file listing, footer schema read, py4j round trips), and the
+# bench constructs every query fresh 3x per measurement — ~20-40 s of a
+# full sweep was spent rebuilding identical scan plans (r11 measurement).
+# The memo shares the immutable logical plan only: every execution still
+# scans the parquet files (no data or results are cached), and split
+# planning still reads session confs at execution time, so relayout tests
+# and AQE behave identically.
 
 
 def clear_load_memo() -> None:
-    """Drop every memoized scan plan — for callers that rewrite parquet
-    under a previously-loaded path (the captured file listing and footer
-    schema would be stale). Exposed per round-11 ADVICE instead of leaving
-    invalidation as a comment-only caveat."""
-    _LOAD_MEMO.clear()
+    """Drop every memoized scan plan, in every session — for callers that
+    rewrite parquet under a previously-loaded path (the captured file
+    listing and footer schema would be stale)."""
+    clear_session_memo("catalog")
 
 
 def _parse_bytes(v: str, default: int = 134217728) -> int:
@@ -93,9 +81,8 @@ def load_table(
     spark: SparkSession, sf_dir: str, name: str, *, min_partitions: int | None = None
 ) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (id(spark), sf_dir, name)
-    df = _LOAD_MEMO.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
         dtypes = dict(df.dtypes)
@@ -105,7 +92,9 @@ def load_table(
         for c, dt in dtypes.items():
             if dt == "timestamp_ntz":
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
-        _LOAD_MEMO[key] = df
+        return df
+
+    df = session_memo(spark, ("catalog", sf_dir, name), build)
     if min_partitions:
         # Per-row-expensive pipelines (hashing, vector math) ask for a floor
         # on scan parallelism: the test corpus is one single-row-group file

@@ -26,8 +26,8 @@ sketch, which is exactly layout-insensitive AND oracle-backed, so the
 query left the rows-only tail and the exception is gone; the built-in
 KLL surface stays rank-error-pinned in test_pipeline_ops.py.)
 
-The per-session trainer/corpus memos are cleared between layouts:
-_EMB_CACHE holds a localCheckpoint'ed corpus (frozen partitioning) and the
+The per-session trainer/corpus memos are cleared between layouts: the
+"emb" memo holds a localCheckpoint'ed corpus (frozen partitioning) and the
 codebook memos would otherwise serve config-A training to the config-B
 run, silently turning the probe into a no-op.
 """
@@ -49,16 +49,9 @@ LAYOUTS = [
 ]
 
 def _clear_memos() -> None:
-    from kafka_clickhouse_example_spark.plans import (
-        queries_similarity as qs,
-        queries_text as qt,
-    )
+    from kafka_clickhouse_example_spark.session import clear_session_memo
 
-    qs._EMB_CACHE.clear()
-    qs._IVF_CACHE.clear()
-    qs._PQ_CACHE.clear()
-    qs._IVFPQ_CACHE.clear()
-    qt._BPE_MERGES_CACHE.clear()
+    clear_session_memo("emb", "ivf", "pq", "ivfpq", "bpe_merges")
 
 
 def _fmt(v) -> str:

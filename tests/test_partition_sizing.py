@@ -108,14 +108,15 @@ def test_memo_residency_shapes():
 
 def test_memo_guard_wired_into_shingle_memo(spark, monkeypatch):
     from kafka_clickhouse_example_spark.plans import queries_dedup as QD
+    from kafka_clickhouse_example_spark.session import clear_session_memo
 
     monkeypatch.setattr(P, "MEMO_RESIDENCY_HEADROOM", 1e-12)
-    monkeypatch.setattr(QD, "_SHINGLE_CACHE", {})
+    clear_session_memo("shingles")
     with pytest.warns(RuntimeWarning, match="memo.*parquet-backed store"):
         QD._shingled(spark, "/root/testdata/sf0.001")
     # and silent under the real bound
     monkeypatch.undo()
-    monkeypatch.setattr(QD, "_SHINGLE_CACHE", {})
+    clear_session_memo("shingles")
     with warnings.catch_warnings(record=True) as seen:
         warnings.simplefilter("always")
         QD._shingled(spark, "/root/testdata/sf0.001")
